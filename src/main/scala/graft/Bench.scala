@@ -22,9 +22,9 @@ import org.apache.spark.sql.SparkSession
   * so all cross-query memo builds happen there, overlapped — `build_sec`
   * is that phase's WALL (plus stray rep-time builds), the run's true
   * build cost, while `builds`/`builds_excl_sec` keep per-key EXCLUSIVE
-  * seconds for attribution (Caches' per-thread child-chain accounting;
-  * a thread waiting out a sibling's in-flight build books the wait as
-  * child time). Timed reps then run serially against hot memos.
+  * seconds for attribution ([[BuildLedger]]'s per-thread child-chain
+  * accounting; a thread waiting out a sibling's in-flight build books the
+  * wait as child time). Timed reps then run serially against hot memos.
   * A build whose window was steal-flagged — and, since r15, EVERY build
   * row above ~0.3 s exclusive (the whole ledger was
   * contention-inflated 4-6× by the saturated prebuild on the r14
@@ -47,6 +47,19 @@ import org.apache.spark.sql.SparkSession
   * and every row read high; nothing in the line said so).
   */
 object Bench {
+  /** Build rows at or above this many exclusive seconds get one timed
+    * rebuild in the retime pass.
+    */
+  private val RetimeThresholdSec = 0.3
+  /** Reps a noisy or contended query escalates to. */
+  private val EscalatedReps = 5
+
+  /** `parse` of a /proc file's text; `orElse` off-Linux or on any failure. */
+  private def fromProc[A](path: String, orElse: A)(parse: String => A): A =
+    try parse(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
+      java.nio.charset.StandardCharsets.UTF_8))
+    catch { case scala.util.control.NonFatal(_) => orElse }
+
   /** 1-minute load average from /proc/loadavg (-1.0 off-Linux). Recorded
     * at run start and end: round-over-round deltas on a shared box have
     * repeatedly turned out to be ambient load, not code (r6 driver run
@@ -54,12 +67,7 @@ object Bench {
     * could not show that. With load_start/load_end in the line, a delta
     * that rides a load spike is attributable instead of alarming.
     */
-  private def loadAvg(): Double =
-    try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/loadavg")),
-        java.nio.charset.StandardCharsets.UTF_8)
-      .split("\\s+")(0).toDouble
-    catch { case scala.util.control.NonFatal(_) => -1.0 }
+  private def loadAvg(): Double = fromProc("/proc/loadavg", -1.0)(_.split("\\s+")(0).toDouble)
 
   /** Cumulative hypervisor STEAL jiffies (/proc/stat "cpu" line, field
     * 9; -1 off-Linux). Recorded at run start and end: this box measured
@@ -70,11 +78,7 @@ object Bench {
     * 10 ms ticks (divide by 100 for seconds · cores).
     */
   private def stealJiffies(): Long =
-    try new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/stat")),
-        java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.next().split("\\s+")(8).toLong
-    catch { case scala.util.control.NonFatal(_) => -1L }
+    fromProc("/proc/stat", -1L)(_.linesIterator.next().split("\\s+")(8).toLong)
 
   /** This JVM's cumulative CPU jiffies (utime+stime, /proc/self/stat
     * fields 14-15; -1 off-Linux). steal_ticks only sees HYPERVISOR
@@ -84,15 +88,11 @@ object Bench {
     * (r8 observed back-to-back same-code runs at 126 vs 110 s with
     * steal ≈ 2 s-core but ambient load 1.3-2.5 at run start).
     */
-  private def cpuJiffies(): Long =
-    try {
-      val stat = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/proc/self/stat")),
-        java.nio.charset.StandardCharsets.UTF_8)
-      // comm (field 2) may contain spaces: split after the closing paren
-      val rest = stat.substring(stat.lastIndexOf(')') + 2).split("\\s+")
-      rest(11).toLong + rest(12).toLong // utime, stime (1-based fields 14,15)
-    } catch { case scala.util.control.NonFatal(_) => -1L }
+  private def cpuJiffies(): Long = fromProc("/proc/self/stat", -1L) { stat =>
+    // comm (field 2) may contain spaces: split after the closing paren
+    val rest = stat.substring(stat.lastIndexOf(')') + 2).split("\\s+")
+    rest(11).toLong + rest(12).toLong // utime, stime (1-based fields 14,15)
+  }
 
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
@@ -101,73 +101,16 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // the one shared builder (r14 ADVICE): Bench, Verify and PlanDump
-    // must plan under identical config or the dumped plan evidence
-    // stops matching the timed plans
+    // the one shared builder (r14 ADVICE; see Sessions.local)
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
-    // Build-cost extraction (r7 ask 4): a cross-query memo BUILD is
-    // forced to materialize at build time and its cost recorded under
-    // the memo key, then SUBTRACTED from the consuming query's elapsed
-    // time — so per-query medians measure the query's own plan, not
-    // whichever consumer ran first in sorted order (the r7 attribution
-    // instability: pr_components_10k 6.1 vs 14.2 s on identical code).
-    // Since r14 builds run CONCURRENTLY in the prebuild phase, so every
-    // observer mutation takes `ledgerLock` and the consumer tag is a
-    // ThreadLocal.
-    val ledgerLock = new Object
-    val buildLedger = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // per-build contention forensics (r12 verdict task 3): the steal
-    // ticks inside each build's own wall window, plus which query's
-    // execution triggered it — a steal-flagged build gets ONE timed
-    // rebuild at end of run (see the retime pass below) so the ledger
-    // row publishes a quiet number instead of a poisoned one
-    val buildSteal = scala.collection.mutable.HashMap.empty[String, Long]
-    // the build's FULL closure window (children included) — the wall
-    // that matches the steal delta's window; the LEDGER keeps exclusive
-    // seconds (buildObserver's value), which must never be flagged
-    // against full-window steal (a parent of a long child chain would
-    // over-flag on ticks that fell inside its children)
-    val buildFullWall = scala.collection.mutable.HashMap.empty[String, Double]
-    val buildConsumer = scala.collection.mutable.HashMap.empty[String, String]
-    val currentQuery = new ThreadLocal[String] {
-      override def initialValue: String = "prebuild"
-    }
-    @volatile var retiming = false
-    // retime mode may rebuild a flagged key's WHOLE memo chain; only
-    // the flagged keys publish their rebuild time — an unflagged chain
-    // member's first (cold) build number must not be replaced by its
-    // warm rebuild, or retimed runs would read lower than quiet ones
-    @volatile var retimeKeys: Set[String] = Set.empty
-    var buildAccum = 0.0
-    Caches.stealProbe = Some(() => stealJiffies())
-    Caches.buildStealObserver = Some { (key, st, fullWall) =>
-      ledgerLock.synchronized {
-        if (!retiming) {
-          buildSteal(key) = buildSteal.getOrElse(key, 0L) + st
-          buildFullWall(key) = buildFullWall.getOrElse(key, 0.0) + fullWall
-        } else if (retimeKeys.contains(key)) {
-          buildSteal(s"retime:$key") = st
-          buildFullWall(s"retime:$key") = fullWall
-        }
-      }
-    }
-    Caches.buildObserver = Some { (key, sec) =>
-      ledgerLock.synchronized {
-        if (!retiming) {
-          buildLedger(key) = buildLedger.getOrElse(key, 0.0) + sec
-          buildConsumer.getOrElseUpdate(key, currentQuery.get)
-          buildAccum += sec
-        } else if (retimeKeys.contains(key)) {
-          // retime pass: a QUIET rebuild replaces the flagged row; a
-          // rebuild that rode another burst keeps the smaller of the two
-          // (and the key stays flagged — see buildsStillFlagged)
-          if (buildLedger.contains(key) && sec < buildLedger(key))
-            buildLedger(key) = sec
-        }
-      }
-    }
+    // Build-cost extraction (r7 ask 4): memo builds are booked on
+    // named ledger rows and SUBTRACTED from the consuming rep's wall, so
+    // a median measures the query's own plan, not whichever consumer
+    // ran first (pr_components_10k 6.1 vs 14.2 s on identical code).
+    val ledger = new BuildLedger(() => stealJiffies())
+    Caches.trace = Some(ledger)
 
     def materialize(name: String): Option[String] =
       try {
@@ -189,15 +132,8 @@ object Bench {
     // the full registry.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // SPARK_GRAFT_REVERSE=1 reverses the (still deterministic) execution
-    // order — a contamination diagnostic: per-query medians that FOLLOW
-    // POSITION under reversal (early rows slow either way) indicate
-    // decaying in-run JVM state, not plan cost. Dev-only; the driver
-    // never sets it.
-    val names0 = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    val names =
-      if (sys.env.contains("SPARK_GRAFT_REVERSE")) names0.reverse else names0
     require(names.nonEmpty,
       s"SPARK_GRAFT_ONLY matched no registered query: ${only.getOrElse(Set.empty).mkString(",")}")
 
@@ -227,27 +163,19 @@ object Bench {
     val probeCalib = AmbientProbe.calibrate()
     @volatile var probeMin = probeCalib
 
-    // PREBUILD phase (r13 verdict task 2): materialize every registry
-    // query ONCE, concurrently on a bounded pool, BEFORE any timed rep.
-    // All cross-query memo builds land here — overlapped, so the ~110
+    // PREBUILD phase (r13 verdict task 2, see the scaladoc): the ~110
     // small builds (avg 0.8 s, scheduler-latency-bound: a 32-partition
-    // shuffle of kilobytes idles most of the box) stop serializing, and
-    // every timed rep then runs against hot memos: per-query medians
-    // measure the query plan with zero build-attribution noise. The
-    // ledger still books per-build EXCLUSIVE seconds per key (the
-    // Caches child-chain accounting works per thread; a thread that
-    // waits out a sibling's in-flight build books the wait as child
-    // time, never as its own build). `build_sec` is now this phase's
-    // WALL — the run's true build cost — while `builds_excl_sec`
-    // carries the old sum-of-rows quantity.
-    val prebuildPar = sys.env.getOrElse("SPARK_GRAFT_BUILD_PAR", "8").toInt
+    // shuffle of kilobytes idles most of the box) overlap instead of
+    // serializing inside first reps. At most 8 builders, never more
+    // than the box has cores (8 oversubscribed a 4-core box).
+    val prebuildPar = math.min(8, Runtime.getRuntime.availableProcessors())
     val pre0 = System.nanoTime()
     val prePool = java.util.concurrent.Executors.newFixedThreadPool(prebuildPar)
     try {
       names.map { n =>
         prePool.submit(new Runnable {
           def run(): Unit = {
-            currentQuery.set(n)
+            ledger.currentQuery.set(n)
             // prebuild errors are not recorded: the timed rep below
             // reports the same error attributably
             materialize(n)
@@ -309,7 +237,7 @@ object Bench {
     // exclusive-rows sum at the phase boundary: whatever the ledger
     // gains AFTER this point fired inside a timed rep (stray build) and
     // belongs in build_sec on top of the phase wall
-    val ledgerAfterPrebuild = ledgerLock.synchronized(buildLedger.values.sum)
+    val ledgerAfterPrebuild = ledger.synchronized(ledger.rows.values.sum)
     // one probe over the phase boundary: a contended prebuild inflates
     // ledger rows the same way a contended rep inflates a median
     val prebuildProbe = AmbientProbe.checkedProbe(probeMin)
@@ -335,12 +263,11 @@ object Bench {
     // flagged — the per-rep steal test misses co-tenant contention that
     // steals wall time without hypervisor-steal ticks. A query whose
     // rep spread (max/min) exceeds 2×, or whose window rode a steal
-    // burst, now runs EXTRA reps (to `escReps`, default 5) so the
+    // burst, now runs EXTRA reps (to `EscalatedReps`) so the
     // median re-centers on the quiet mode; whatever stays noisy after
     // escalation is reported in "spread_flagged"/"steal_flagged" — a
     // round-over-round reader treats those rows as contention-suspect,
     // not regressions.
-    val escReps = sys.env.getOrElse("SPARK_GRAFT_ESC_REPS", "5").toInt
     def spreadSuspect(times: Seq[Double]): Boolean =
       times.size > 1 && times.min > 0 && times.max / times.min > 2.0 &&
         times.max - times.min > 0.2 // micro-query jitter is not contention
@@ -351,9 +278,9 @@ object Bench {
     // the rep's window hits at least one of them
     var lastProbe = prebuildProbe
     val raw = names.map { name =>
-      currentQuery.set(name)
+      ledger.currentQuery.set(name)
       def oneRep(): Rep = {
-        buildAccum = 0.0
+        ledger.drainAccum()
         val pb = lastProbe
         val s0 = stealJiffies()
         val t0 = System.nanoTime()
@@ -363,7 +290,7 @@ object Bench {
         val pa = AmbientProbe.checkedProbe(probeMin)
         probeMin = math.min(probeMin, pa)
         lastProbe = pa
-        Rep(wall - buildAccum, err, st, wall, pb, pa)
+        Rep(wall - ledger.drainAccum(), err, st, wall, pb, pa)
       }
       // provisional ambient test for ESCALATION only (min-so-far
       // baseline); the published flags re-test against the run-global
@@ -376,7 +303,7 @@ object Bench {
         (spreadSuspect(runs.map(_.time)) || stealSuspect ||
           runs.exists(ambientSusp))
       if (escalate)
-        runs ++= (runs.size until escReps).map(_ => oneRep())
+        runs ++= (runs.size until EscalatedReps).map(_ => oneRep())
       // per-rep chronology on stderr (stdout carries ONLY the compact
       // line): the [min,max] spread can't distinguish "cold rep 1" from
       // "a warm rep degraded mid-run", which is exactly the signature
@@ -402,10 +329,8 @@ object Bench {
     // before retries) is uncorrelated across the rep's two brackets.
     // The 3 ms absolute floor keeps micro-jitter on a fast box from
     // flagging (same spirit as the 10-tick steal floor).
-    def ambientFlagged(r: Rep): Boolean = {
-      val p = math.min(r.pBefore, r.pAfter)
-      p > AmbientProbe.FlagRatio * probeMin && p - probeMin > 0.003
-    }
+    def probeHot(p: Double): Boolean = p > AmbientProbe.FlagRatio * probeMin && p - probeMin > 0.003
+    def ambientFlagged(r: Rep): Boolean = probeHot(math.min(r.pBefore, r.pAfter))
     case class Res(name: String, median: Double, tMin: Double, tMax: Double,
                    err: Option[String], stealReps: Seq[Long],
                    stealSusp: Boolean, spreadSusp: Boolean, escalated: Boolean,
@@ -433,57 +358,43 @@ object Bench {
     // contaminated (no quiet rep existed to re-center on)
     val noQuietRep = results.collect { case r if r.nQuiet == 0 => r.name }
 
-    // Retime pass for BUILD rows. Two populations share it:
-    //  - steal-flagged keys (r12 verdict task 3): builds run once per
-    //    ledger key, so the query-rep quiet-median treatment can't reach
-    //    them;
-    //  - EVERY row above a small threshold (r14 verdict task 2): the
-    //    first build of each key runs inside the 8-thread prebuild
-    //    saturating a cold JVM, which inflated exclusive rows 4-6× on
-    //    the r14 driver box (build:dedup:big_shingles_10 published 51 s
-    //    vs single-digit quiet) and regressed the cold ×10 slopes 10×
-    //    on paper with no code change. Rebuilding on a ≤2-thread pool
-    //    AFTER the timed reps (JIT long drained, box state known) and
-    //    publishing min(first, retimed) per key makes the ledger a
-    //    quiet-attribution record again; the PREBUILD PHASE WALL
-    //    (`build_sec`) still reports the true overlapped cost of the
-    //    concurrent phase. The pre-retime rows stay published in the
-    //    full record under `builds_first` so the correction is visible,
-    //    and the pass's own wall under `retime_sec`.
-    val buildsFirst = ledgerLock.synchronized(buildLedger.toMap)
-    val retimeThr = sys.env.getOrElse("SPARK_GRAFT_RETIME_THR", "0.3").toDouble
-    val flaggedBuildKeys = buildLedger.keys.filter { k =>
-      buildSteal.getOrElse(k, 0L) > 10 &&
-        stealFlagged(buildFullWall.getOrElse(k, 0.0), buildSteal.getOrElse(k, 0L))
+    // Retime pass for BUILD rows (see the scaladoc): steal-flagged keys
+    // (r12 verdict task 3), which the quiet-median treatment cannot
+    // reach, and every heavy row (r14 verdict task 2: the saturated
+    // prebuild inflated exclusive rows 4-6× on the r14 driver box —
+    // build:dedup:big_shingles_10 published 51 s vs single-digit quiet).
+    // The rebuild runs after the timed reps, JIT long drained.
+    val buildsFirst = ledger.synchronized(ledger.rows.toMap)
+    val flaggedBuildKeys = ledger.rows.keys.filter { k =>
+      stealFlagged(ledger.fullWall.getOrElse(k, 0.0), ledger.steal.getOrElse(k, 0L))
     }.toVector
-    val heavyBuildKeys = buildLedger.collect {
-      case (k, s) if s >= retimeThr && !k.startsWith("discarded:") => k
+    val heavyBuildKeys = ledger.rows.collect {
+      case (k, s) if s >= RetimeThresholdSec => k
     }.toVector
     val retime0 = System.nanoTime()
     val retimeSet = (flaggedBuildKeys ++ heavyBuildKeys).distinct
     if (retimeSet.nonEmpty) {
-      retiming = true
-      retimeKeys = retimeSet.toSet
+      ledger.retimeKeys = Some(retimeSet.toSet)
       Caches.releaseAll()
       // one consumer per key (sorted, deduped — a consumer re-triggers
       // its whole build chain) on a 2-thread pool: enough overlap to
       // back-fill scheduler gaps, not enough to re-create the
       // contention the pass exists to remove
-      val consumers = retimeSet.flatMap(buildConsumer.get).distinct.sorted
+      val consumers = retimeSet.flatMap(ledger.consumer.get).distinct.sorted
       val rtPool = java.util.concurrent.Executors.newFixedThreadPool(2)
       try {
         consumers.map { qn =>
           rtPool.submit(new Runnable {
-            def run(): Unit = { currentQuery.set(qn); materialize(qn) }
+            def run(): Unit = { ledger.currentQuery.set(qn); materialize(qn) }
           })
         }.foreach(_.get())
       } finally rtPool.shutdown()
-      retiming = false
+      ledger.retimeKeys = None
     }
     val retimeSec = (System.nanoTime() - retime0) / 1e9
     val buildsStillFlagged = flaggedBuildKeys.filter { k =>
-      buildFullWall.get(s"retime:$k") match {
-        case Some(w) => stealFlagged(w, buildSteal.getOrElse(s"retime:$k", 0L))
+      ledger.fullWall.get(s"retime:$k") match {
+        case Some(w) => stealFlagged(w, ledger.steal.getOrElse(s"retime:$k", 0L))
         case None => true // consumer unknown or rebuild never fired
       }
     }
@@ -530,33 +441,32 @@ object Bench {
     // build cost, which the concurrent pool compresses below the
     // serialized sum. The old sum-of-exclusive-rows quantity stays
     // published as `builds_excl_sec` (row-level attribution unchanged).
-    val buildsExclSec = buildLedger.values.sum
+    val buildsExclSec = ledger.rows.values.sum
     // stray-build detection compares the PRE-RETIME sum against the
     // phase-boundary sum (the retime pass lowers rows, which would
     // otherwise hide strays behind the clamp)
     val buildSec = prebuildSec +
       math.max(0.0, buildsFirst.values.sum - ledgerAfterPrebuild)
-    val builds = buildLedger.toSeq.sortBy(-_._2)
+    def buildsJson(rows: Iterable[(String, Double)]): String = rows.toSeq.sortBy(-_._2)
       .map { case (k, s) => s"${q("build:" + k)}:${math.rint(s * 100) / 100}" }
       .mkString("{", ",", "}")
+    val builds = buildsJson(ledger.rows)
     // pre-retime rows (full record only): the saturated-prebuild numbers
     // the retime pass corrected — kept so the correction is auditable
-    val buildsFirstJson = buildsFirst.toSeq.sortBy(-_._2)
-      .map { case (k, s) => s"${q("build:" + k)}:${math.rint(s * 100) / 100}" }
-      .mkString("{", ",", "}")
+    val buildsFirstJson = buildsJson(buildsFirst)
     // Per-query COLD TOTALS (r14 verdict task 3): for every query that
     // triggered at least one memo build, median + Σ(its attributed
     // build rows) — the cost a first/only run of that query pays, which
     // makes build-relocation visible at a glance (a memo-fed median is
     // a cache read; the cold total is the honest end-to-end number).
-    // Attribution is buildConsumer's first-requester map: a build shared
+    // Attribution is the ledger's first-requester map: a build shared
     // by several queries is charged to whichever prebuild task requested
     // it first (deterministic up to pool scheduling), so totals are a
     // per-run attribution, not an exact per-query re-run cost.
-    val keysByConsumer = buildConsumer.toSeq.groupBy(_._2)
+    val keysByConsumer = ledger.consumer.toSeq.groupBy(_._2)
     val coldTotals = results.flatMap { r =>
       keysByConsumer.get(r.name).map { ks =>
-        val b = ks.map(_._1).flatMap(buildLedger.get).sum
+        val b = ks.map(_._1).flatMap(ledger.rows.get).sum
         (r.name, r.median + b)
       }
     }.sortBy(-_._2)
@@ -645,7 +555,7 @@ object Bench {
     val medianOf = results.map(r => r.name -> r.median).toMap
     def coldCost(name: String, buildKeys: Seq[String]): Option[Double] =
       medianOf.get(name)
-        .map(_ + buildKeys.flatMap(buildLedger.get).sum)
+        .map(_ + buildKeys.flatMap(ledger.rows.get).sum)
     val scalingRaw = scalingPairs.flatMap { case (fam, (base, bb), (big, gb)) =>
       for (t1 <- coldCost(base, bb); t10 <- coldCost(big, gb))
         yield s"${q(fam)}:[${math.rint(t1 * 100) / 100},${math.rint(t10 * 100) / 100}]"
@@ -687,8 +597,7 @@ object Bench {
       .mkString("[", ",", "]")
     val probeCalibR = math.rint(probeCalib * 1e4) / 1e4
     val probeMinR = math.rint(probeMin * 1e4) / 1e4
-    val prebuildAmbient =
-      prebuildProbe > AmbientProbe.FlagRatio * probeMin && prebuildProbe - probeMin > 0.003
+    val prebuildAmbient = probeHot(prebuildProbe)
 
     val json = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps,"warmup_sec":$warmupSec,"jit_drain_sec":${math.rint(jitDrainSec * 100) / 100},"load_start":$loadStart,"load_end":$loadEnd,"steal_ticks":$stealTicks,"cpu_ticks":$cpuTicks,"steal_ratio":$stealRatio,"probe_calib":$probeCalibR,"probe_min":$probeMinR,"ambient_ratio":$ambientRatio,"run_valid":$runValid,"steal_flagged":$flaggedJson,"spread_flagged":$spreadFlaggedJson,"ambient_flagged":$ambientJson,"escalated":$escalatedJson,"no_quiet_rep":$noQuietJson,"builds_steal_flagged":$buildsFlaggedJson,"steal_reps":$stealReps,"quiet_reps":$quietReps,"probe_reps":$probeReps,"scaling":$scaling,"build_sec":$buildSec,"prebuild_par":$prebuildPar,"prebuild_ambient":$prebuildAmbient,"builds_excl_sec":${math.rint(buildsExclSec * 100) / 100},"retime_sec":${math.rint(retimeSec * 100) / 100},"storage_mem_mb":$storageMemMb,"storage_disk_mb":$storageDiskMb,"memos_spilled":$memosSpilled,"builds":$builds,"builds_first":$buildsFirstJson,"cold_totals":$coldTotalsJson,"queries":$qs,"spread":$spread,"errors":$errs,"sf":"$sfDir"}"""
     // The full-fidelity record goes ONLY to target/bench.json — NOT to
@@ -759,9 +668,7 @@ object Bench {
       val omittedSec = math.rint(sortedBySec.drop(kept).map(_.median).sum * 1000) / 1000
       // heaviest builds by name (the attribution-relevant ones, r7 ask
       // 4); the long tail rides in build_sec and the full record's map
-      val topBuilds = buildLedger.toSeq.filter(_._2 >= 0.25).sortBy(-_._2).take(4)
-        .map { case (k, s) => s"${q("build:" + k)}:${math.rint(s * 100) / 100}" }
-        .mkString("{", ",", "}")
+      val topBuilds = buildsJson(ledger.rows.toSeq.filter(_._2 >= 0.25).sortBy(-_._2).take(4))
       s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","reps":$reps,""" +
         s""""sf":"$sfDir","n_queries":${results.length},"n_errors":${results.count(_.err.isDefined)},""" +
         s""""load_start":$loadStart,"load_end":$loadEnd,"steal_ticks":$stealTicks,""" +
@@ -834,5 +741,67 @@ object Bench {
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"teardown: ${e.getMessage}") }
     println(compact)
+  }
+}
+
+/** Bench's memo-build ledger, installed as [[Caches.trace]]. A build
+  * span books its EXCLUSIVE seconds (nested builds and mutex waits are
+  * child time, so rows never double-count) plus the steal ticks of its
+  * FULL window and that window's wall — flagging exclusive time against
+  * full-window steal over-flagged parents of long build chains. Failed
+  * builds book nothing. Builds run concurrently in the prebuild phase,
+  * so all mutation is under the ledger's monitor.
+  */
+private[graft] final class BuildLedger(stealTicks: () => Long) extends Caches.BuildTrace {
+  val rows = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+  val steal = scala.collection.mutable.HashMap.empty[String, Long]
+  val fullWall = scala.collection.mutable.HashMap.empty[String, Double]
+  val consumer = scala.collection.mutable.HashMap.empty[String, String]
+  val currentQuery = ThreadLocal.withInitial[String](() => "prebuild")
+  /** Set during the retime pass: only these keys publish a rebuild (an
+    * unflagged chain member's warm rebuild must not replace its cold row).
+    */
+  @volatile var retimeKeys: Option[Set[String]] = None
+  private var accum = 0.0
+  /** Seconds of nested spans completed inside the current span, per thread. */
+  private val childSec = ThreadLocal.withInitial[java.lang.Double](() => 0.0)
+
+  /** Exclusive build seconds booked since the last drain. */
+  def drainAccum(): Double = synchronized { val a = accum; accum = 0.0; a }
+
+  def span[A](key: Option[String])(body: => A): A = key match {
+    case None => // a mutex wait: all of it is child time
+      val t0 = System.nanoTime()
+      try body finally childSec.set(childSec.get() + (System.nanoTime() - t0) / 1e9)
+    case Some(k) =>
+      val parent = childSec.get()
+      childSec.set(0.0)
+      val t0 = System.nanoTime()
+      val s0 = stealTicks()
+      var total = 0.0
+      try {
+        val out = body
+        total = (System.nanoTime() - t0) / 1e9
+        book(k, total - childSec.get(), stealTicks() - s0, total)
+        out
+      } finally childSec.set(parent + total) // the enclosing span's child time
+  }
+
+  private def book(key: String, excl: Double, st: Long, wall: Double): Unit = synchronized {
+    retimeKeys match {
+      case None =>
+        rows(key) = rows.getOrElse(key, 0.0) + excl
+        steal(key) = steal.getOrElse(key, 0L) + st
+        fullWall(key) = fullWall.getOrElse(key, 0.0) + wall
+        consumer.getOrElseUpdate(key, currentQuery.get)
+        accum += excl
+      case Some(keys) if keys(key) =>
+        // a rebuild that rode another burst keeps the smaller of the two
+        // (and the key stays flagged — see buildsStillFlagged)
+        if (rows.get(key).exists(excl < _)) rows(key) = excl
+        steal(s"retime:$key") = st
+        fullWall(s"retime:$key") = wall
+      case _ =>
+    }
   }
 }

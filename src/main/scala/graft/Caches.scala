@@ -15,18 +15,19 @@ import org.apache.spark.sql.DataFrame
   * a memoized BUILD runs outside it — a build can span multiple Spark
   * jobs (the Components iterative loop, KMeans training), and holding the
   * global monitor for its whole duration would block every concurrent
-  * register/memoized/releaseAll caller for seconds. A build that raced
-  * another builder of the same key defers to the winner already in the
-  * map (the loser's frame is unpersisted on the spot). A build that
-  * raced a [[releaseAll]] re-registers its frame at the post-release
-  * state: the frame was built FRESH and never entered the released map,
-  * so inserting it resurrects nothing — while handing it back uncached
-  * (the previous design) silently re-ran the whole build once per
-  * reference for multi-reference consumers (the triangles edge memo sits
-  * on 3 join sides, ngramSkew's inverted index on 4). The next
-  * releaseAll reclaims it like any other entry. Builders that
-  * recursively memoize sub-frames (dedup_groups → minhash pairs →
-  * shingles) nest fine — no lock is held across the recursion.
+  * register/memoized/releaseAll caller for seconds. Builders of the SAME
+  * key serialize on a per-key lock instead: the first requester builds
+  * and inserts, later ones wait and read its entry, so a key is built
+  * once per (session, dir) between releases. A build that raced a
+  * [[releaseAll]] inserts its frame at the post-release state: the frame
+  * was built FRESH and never entered the released map, so inserting it
+  * resurrects nothing — while handing it back uncached (an earlier
+  * design) silently re-ran the whole build once per reference for
+  * multi-reference consumers (the triangles edge memo sits on 3 join
+  * sides, ngramSkew's inverted index on 4). The next releaseAll reclaims
+  * it like any other entry. Builders that recursively memoize sub-frames
+  * (dedup_groups → minhash pairs → shingles) nest fine — only the keys'
+  * own locks are held across the recursion, and they form a DAG.
   */
 object Caches {
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -34,47 +35,20 @@ object Caches {
   private val memo = scala.collection.mutable.HashMap
     .empty[(org.apache.spark.sql.SparkSession, String, String), DataFrame]
 
-  /** Bench instrumentation (r7 verdict ask 4): when set, the observer
-    * receives each freshly built memo's key plus the build's EXCLUSIVE
-    * wall seconds (closure evaluation — which may span whole training
-    * loops or artifact writes — plus cache materialization, minus any
-    * nested memo builds, which report their own entries), so the build
-    * cost lands on a named `build:*` ledger row instead of whichever
-    * registry consumer happened to run first in sorted order (the r7
-    * attribution instability: medians-of-3 differing 2.3× on identical
-    * code). Materialization itself is UNCONDITIONAL (see [[memoized]]'s
-    * stats note) — the observer only decides whether the cost is
-    * reported on a named row.
+  /** The registry's one timing hook, a nested span: `Some(key)` wraps one
+    * build of `key` (closure, persist, cache materialization and cache
+    * serving), `None` a wait on a key's build mutex while another thread
+    * builds it. Spans nest per thread. Bench's build ledger implements
+    * it, so the policy for charging seconds to rows lives in Bench.
     */
-  @volatile private[graft] var buildObserver: Option[(String, Double) => Unit] = None
+  trait BuildTrace { def span[A](key: Option[String])(body: => A): A }
 
-  /** Hypervisor-steal probe for build windows (r12 verdict task 3): when
-    * a host sets this (Bench does, to the /proc/stat steal reader), each
-    * memo build ALSO reports the steal ticks that fell inside its own
-    * wall window via [[buildStealObserver]], so a contended build row
-    * can be recognized and re-timed instead of publishing a poisoned
-    * number. None (the default) costs nothing.
-    */
-  @volatile private[graft] var stealProbe: Option[() => Long] = None
+  /** None (the default) costs nothing; tests substitute a recorder. */
+  @volatile private[graft] var trace: Option[BuildTrace] = None
 
-  /** Companion to [[buildObserver]]:
-    * (key, stealTicksInBuildWindow, fullWindowWallSec). The steal delta
-    * spans the build's WHOLE closure — nested child builds included —
-    * so the matching wall time here is the full window too, NOT the
-    * exclusive seconds the time observer reports (flagging exclusive
-    * time against full-window steal over-flagged parents of long build
-    * chains). Fired just before the time observer for the same build;
-    * only when [[stealProbe]] is set.
-    */
-  @volatile private[graft] var buildStealObserver: Option[(String, Long, Double) => Unit] = None
-
-  /** Total seconds of memo builds completed so far within the CURRENT
-    * build's closure on this thread — what the enclosing build subtracts
-    * to report exclusive time (nested ledger rows must not double-count
-    * into their parent, or the bench would over-subtract from consumers).
-    */
-  private val childBuildSec = new ThreadLocal[java.lang.Double] {
-    override def initialValue: java.lang.Double = 0.0
+  private def traced[A](key: Option[String])(body: => A): A = trace match {
+    case Some(t) => t.span(key)(body)
+    case None => body
   }
 
   /** Plan-audit escape hatch: truncation makes a memoized frame's plan an
@@ -88,15 +62,6 @@ object Caches {
   def register(df: DataFrame): DataFrame = synchronized { frames += df; df }
   def onRelease(hook: () => Unit): Unit = synchronized { hooks += hook }
 
-  /** Cross-query memo: build-and-persist a frame once per
-    * (session, dir, key) so every registry query consuming it in one
-    * Verify/Bench run shares the same cached copy. Keyed on the session
-    * OBJECT (reference equality) — NOT identityHashCode, which a new
-    * session can reuse after the old one is GC'd, resurrecting frames
-    * bound to a dead session. The strong key reference adds no lifetime:
-    * the memoized DataFrames themselves pin their session until
-    * [[releaseAll]] clears both.
-    */
   /** Mutual exclusion between memo builds and the plan-audit bracket
     * (PlanAuditSpec.withTransparentMemos): the bracket flips the
     * process-global [[truncateLineage]] flag and clears the memo map,
@@ -117,6 +82,15 @@ object Caches {
     try body finally auditLock.writeLock().unlock()
   }
 
+  /** Cross-query memo: build-and-persist a frame once per
+    * (session, dir, key) so every registry query consuming it in one
+    * Verify/Bench run shares the same cached copy. Keyed on the session
+    * OBJECT (reference equality) — NOT identityHashCode, which a new
+    * session can reuse after the old one is GC'd, resurrecting frames
+    * bound to a dead session. The strong key reference adds no lifetime:
+    * the memoized DataFrames themselves pin their session until
+    * [[releaseAll]] clears both.
+    */
   def memoized(spark: org.apache.spark.sql.SparkSession, dir: String, key: String)
               (build: => DataFrame): DataFrame = {
     auditLock.readLock().lock()
@@ -124,151 +98,89 @@ object Caches {
     finally auditLock.readLock().unlock()
   }
 
-  /** Per-key build mutex (r13 verdict task 2): under a CONCURRENT host
-    * (Bench's parallel prebuild phase), two threads requesting the same
-    * cold memo must not both run the build — the insert-race fallback
-    * below keeps correctness but duplicates whole Spark jobs and books
-    * the loser's seconds on a `discarded:` ledger row. The second
-    * requester instead waits on the key's monitor and reads the
-    * winner's entry. Monitors are reentrant (a build recursing into its
-    * own key re-enters), the memo dependency graph is a DAG (recursive
-    * child builds take CHILD keys only — no lock cycles), and the map
-    * is bounded by the number of distinct memo keys.
+  /** Per-key build mutex (r13 verdict task 2; see the object scaladoc):
+    * a concurrent host such as Bench's prebuild phase would otherwise
+    * run duplicate Spark jobs for one cold key. Child builds take CHILD
+    * keys only (the memo graph is a DAG), so the locks cannot cycle; the
+    * map is bounded by the number of distinct memo keys.
     */
   private val keyLocks = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), Object]()
+    (org.apache.spark.sql.SparkSession, String, String),
+    java.util.concurrent.locks.ReentrantLock]()
 
   private def memoizedLocked(spark: org.apache.spark.sql.SparkSession, dir: String, key: String)
               (build: => DataFrame): DataFrame = {
     val k = (spark, dir, key)
-    synchronized(memo.get(k)) match {
-      case Some(df) => df
-      case None =>
-        val keyLock = keyLocks.computeIfAbsent(k, _ => new Object)
-        val w0 = System.nanoTime()
-        keyLock.synchronized {
-          synchronized(memo.get(k)) match {
-            case Some(df) =>
-              // another thread built this key while we waited: the wait
-              // was that build's time, not ours — book it as child time
-              // so an ENCLOSING build's exclusive seconds don't absorb a
-              // sibling thread's whole build (the ledger would
-              // double-count the key otherwise)
-              childBuildSec.set(childBuildSec.get() + (System.nanoTime() - w0) / 1e9)
-              df
-            case None => buildAndInsert(k, key)(build)
-          }
-        }
+    synchronized(memo.get(k)).getOrElse {
+      val keyLock = keyLocks.computeIfAbsent(k, _ => new java.util.concurrent.locks.ReentrantLock())
+      if (!keyLock.tryLock()) traced(None)(keyLock.lock())
+      try synchronized(memo.get(k)).getOrElse(traced(Some(key))(buildAndInsert(k)(build)))
+      finally keyLock.unlock()
     }
   }
 
-  private def buildAndInsert(
-      k: (org.apache.spark.sql.SparkSession, String, String), key: String)
-      (build: => DataFrame): DataFrame = {
-        // Truncate the build's lineage to a LogicalRDD leaf BEFORE
-        // persisting. A memoized frame is an index by contract — its
-        // consumers reach it only through this accessor, never by
-        // re-deriving the plan — but Spark's CacheManager canonicalizes
-        // EVERY cached plan and compares it against EVERY new query
-        // plan. With a registry of 120+ queries and ~30 memo entries
-        // whose build plans are deep (inflated-corpus shingle scans,
-        // trained-quantizer chains), that per-query scan grew to
-        // SECONDS by mid-run: pipeline_curate measured 8.2 s inside the
-        // full bench vs 1.0 s isolated on identical code, pr_components
-        // 3× as soon as three fat memos existed. A leaf plan makes
-        // canonicalization O(#entries) with tiny constants. The trades
-        // are one internal-row copy pass at materialization (the
-        // localCheckpoint technique — NOT the external-Row round-trip,
-        // which measured ~2× on array-heavy frames) and losing
-        // structural cache-substitution for independently re-derived
-        // plans — which no consumer relies on: every consumer reaches a
-        // memo through this accessor. Cached-batch stat pruning is
-        // unaffected (the persist above still builds an
-        // InMemoryRelation; only its CHILD became a leaf).
-        val parentChildSec = childBuildSec.get()
-        childBuildSec.set(0.0)
-        val t0 = System.nanoTime()
-        val steal0 = stealProbe.map(_.apply())
-        var totalSec = 0.0
-        def reportSteal(): Unit =
-          for (p <- stealProbe; obs <- buildStealObserver)
-            obs(key, p() - steal0.getOrElse(0L), (System.nanoTime() - t0) / 1e9)
-        try {
-          val built = build // outside the lock — build may recurse here
-          val df =
-            (if (truncateLineage) org.apache.spark.sql.GraftExpr.truncated(built)
-             else built).persist()
-          val (result, inserted) = synchronized {
-            memo.get(k) match {
-              // another builder of the same key won (possibly after an
-              // interleaved releaseAll) — defer to the cached winner
-              // rather than handing back an uncached duplicate
-              case Some(winner) => df.unpersist(); (winner, false)
-              // no winner: insert — even if a releaseAll ran mid-build.
-              // This frame never entered the released map and its persist
-              // was never registered, so inserting resurrects nothing;
-              // see the object scaladoc for why returning it uncached
-              // instead amplifies recomputes for multi-reference callers
-              case None => frames += df; memo.update(k, df); (df, true)
-            }
-          }
-          // outside the monitor: materialization is an action spanning
-          // Spark jobs and must never run under the lock.
-          //
-          // MEMOIZED-LEAF STATISTICS DISCIPLINE (r11 verdict ask 2, the
-          // pr_hits r9 / pr_triangles join-flap bug class): a lazy memo
-          // hands its FIRST consumer an unmaterialized InMemoryRelation,
-          // which reports the build plan's ESTIMATE stats (a LogicalRDD
-          // leaf carrying optimizedPlan.stats — for builds containing
-          // joins, a product estimate off by orders of magnitude), while
-          // every LATER consumer plans against the materialized cache's
-          // MEASURED batch sizes. Same query, two different physical
-          // plans depending on consumption order. Counting here — once,
-          // at build, through the just-persisted plan the first consumer
-          // would have materialized anyway — means every consumer
-          // including the first plans against measured stats, and two
-          // consecutive invocations of a memo-fed query plan
-          // identically (asserted by PlanAuditSpec).
-          var out = result
-          if (inserted) {
-            result.count() // materialize the persisted plan into the cache
-            // Serve consumers a frame rooted at the cache entry's
-            // InMemoryRelation (r15, see GraftExpr.servedFromCache):
-            // plan-substitution misses the DEDUPLICATED references of a
-            // self-joining consumer when the truncated leaf advertises a
-            // hash placement (its partitioning field keeps the old
-            // exprIds), so those references re-scanned the build RDD per
-            // rep instead of the cache. Skipped in the audit bracket —
-            // transparent mode exists to SEE the build plan.
-            if (truncateLineage) {
-              val served = org.apache.spark.sql.GraftExpr.servedFromCache(result)
-              if (served ne result) synchronized {
-                if (memo.get(k).exists(_ eq result)) memo.update(k, served)
-              }
-              out = served
-            }
-            buildObserver.foreach { obs =>
-              totalSec = (System.nanoTime() - t0) / 1e9
-              reportSteal()
-              obs(key, totalSec - childBuildSec.get())
-            }
-          } else buildObserver.foreach { obs =>
-            // a build that LOST the insert race still spent real wall
-            // time (its closure ran to completion before deferring), and
-            // that time is subtracted from the consuming query's elapsed
-            // via childBuildSec below — report it under a distinguishing
-            // key so the ledger stays closed instead of the loser's
-            // seconds silently vanishing from both sides (harmless while
-            // Bench runs serially; load-bearing under a parallel host)
-            totalSec = (System.nanoTime() - t0) / 1e9
-            obs(s"discarded:$key", totalSec - childBuildSec.get())
-          }
-          if (totalSec == 0.0) totalSec = (System.nanoTime() - t0) / 1e9
-          out
-        } finally {
-          // the parent (if any) sees this build's FULL time as child time
-          childBuildSec.set(parentChildSec + totalSec)
-        }
+  private def buildAndInsert(k: (org.apache.spark.sql.SparkSession, String, String))
+                            (build: => DataFrame): DataFrame = {
+    // Truncate the build's lineage to a LogicalRDD leaf BEFORE persisting. A
+    // memoized frame is an index by contract — its consumers reach it only
+    // through this accessor, never by re-deriving the plan — but Spark's
+    // CacheManager canonicalizes EVERY cached plan and compares it against
+    // EVERY new query plan. With a registry of 120+ queries and ~30 memo
+    // entries whose build plans are deep (inflated-corpus shingle scans,
+    // trained-quantizer chains), that per-query scan grew to SECONDS by
+    // mid-run: pipeline_curate measured 8.2 s inside the full bench vs 1.0 s
+    // isolated on identical code, pr_components 3× as soon as three fat memos
+    // existed. A leaf plan makes canonicalization O(#entries) with tiny
+    // constants. The trades are one internal-row copy pass at materialization
+    // (the localCheckpoint technique — NOT the external-Row round-trip, which
+    // measured ~2× on array-heavy frames) and losing structural
+    // cache-substitution for independently re-derived plans — which no
+    // consumer relies on: every consumer reaches a memo through this accessor.
+    // Cached-batch stat pruning is unaffected (the persist still builds an
+    // InMemoryRelation; only its CHILD became a leaf).
+    val built = build // outside the monitor — build may recurse here
+    val df =
+      (if (truncateLineage) org.apache.spark.sql.GraftExpr.truncated(built)
+       else built).persist()
+    synchronized {
+      // the caller holds the key's lock, so no other builder can have
+      // inserted; a releaseAll that ran mid-build resurrects nothing by
+      // this insert (see the object scaladoc)
+      assert(memo.get(k).isEmpty, s"memo key ${k._3} inserted by a second builder")
+      frames += df
+      memo.update(k, df)
+    }
+    // outside the monitor: materialization is an action spanning Spark jobs
+    // and must never run under the lock.
+    //
+    // MEMOIZED-LEAF STATISTICS DISCIPLINE (r11 verdict ask 2, the pr_hits r9 /
+    // pr_triangles join-flap bug class): a lazy memo hands its FIRST consumer
+    // an unmaterialized InMemoryRelation, which reports the build plan's
+    // ESTIMATE stats (a LogicalRDD leaf carrying optimizedPlan.stats — for
+    // builds containing joins, a product estimate off by orders of magnitude),
+    // while every LATER consumer plans against the materialized cache's
+    // MEASURED batch sizes. Same query, two different physical plans depending
+    // on consumption order. Counting here — once, at build, through the
+    // just-persisted plan the first consumer would have materialized anyway —
+    // means every consumer including the first plans against measured stats,
+    // and two consecutive invocations of a memo-fed query plan identically
+    // (asserted by PlanAuditSpec).
+    df.count()
+    // Serve consumers a frame rooted at the cache entry's InMemoryRelation
+    // (r15, see GraftExpr.servedFromCache): plan-substitution misses the
+    // DEDUPLICATED references of a self-joining consumer when the truncated
+    // leaf advertises a hash placement (its partitioning field keeps the old
+    // exprIds), so those references re-scanned the build RDD per rep instead
+    // of the cache. Skipped in the audit bracket — transparent mode exists to
+    // SEE the build plan.
+    if (!truncateLineage) df
+    else {
+      val served = org.apache.spark.sql.GraftExpr.servedFromCache(df)
+      if (served ne df) synchronized {
+        if (memo.get(k).exists(_ eq df)) memo.update(k, served)
+      }
+      served
+    }
   }
 
   /** Write-once-per-(session, dir) Parquet ARTIFACT: builds `src`,

@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump `.explain("formatted")` for registered queries.
-  * `runMain graft.PlanDump <outDir> <q1,q2,...> [sfDir]` — writes
-  * `<outDir>/<query>.txt` per query (the plans/r14 evidence files).
+  * `runMain graft.PlanDump <outDir> <q1,q2,...|all> [sfDir]` — writes
+  * `<outDir>/<query>.txt` per query (the plans/r14 evidence files);
+  * `all` dumps every registered query.
   * Memo builds ARE materialized first (Caches.memoized runs its build on
   * first touch), so the dumped plan is the steady-state per-rep plan the
   * bench times — the same frame a timed rep materializes.
@@ -11,12 +11,12 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
-    val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
+    val names =
+      if (args(1) == "all") SparkEntry.queries.keys.toSeq.sorted
+      else args(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // the one shared builder (r14 ADVICE): a config drift between this
-    // dev tool and Bench/Verify would make the committed plans/r*
-    // evidence files stop matching the plans the bench actually times
+    // the one shared builder (r14 ADVICE; see Sessions.local)
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_TRANSPARENT=1 (dev only): plan with memo-lineage

@@ -2,10 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE session configuration every driver-contract main runs under
-  * (r14 ADVICE): Bench, Verify and PlanDump each re-declared the same
-  * builder, so a config drift in one would silently de-sync the dumped
-  * plans/r* evidence files (PlanDump) from the plans the bench times and
-  * the frames Verify hands the oracle. Centralizing the builder makes
+  * (r14 ADVICE): Bench, Verify, PlanDump and TimeQuery each re-declared
+  * the same builder, so a config drift in one would silently de-sync the
+  * dumped plans/r* evidence files (PlanDump) from the plans the bench
+  * times and the frames Verify hands the oracle. Centralizing the builder makes
   * "same plan everywhere" a structural property instead of a convention.
   */
 object Sessions {

@@ -558,7 +558,7 @@ object Streaming {
     // files it merges from — no materialization copy needed), the fence
     // id is sealed inside it, and only a COMPLETE stage (_SUCCESS +
     // _fence) is swapped over the live dir via delete + atomic rename.
-    // Every crash window is covered: stage incomplete → discarded on the
+    // Every crash window is covered: stage incomplete → dropped on the
     // next call, live untouched; stage complete but unswapped (incl. a
     // crash between the delete and the rename) → [[recoverStage]]
     // finishes the promotion before the fence is read, so redelivery of

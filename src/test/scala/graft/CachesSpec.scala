@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Memo-lifecycle contract: [[Caches]] frames persist for the whole
   * Verify/Bench run, and [[Caches.releaseAll]] must actually unpersist
@@ -134,6 +137,94 @@ class CachesSpec extends AnyFunSuite {
     assert(Caches.snapshot._2 == 0)
   }
 
+  /** Polls `cond` for up to 30 s; returns its final value. */
+  private def within30s(cond: => Boolean): Boolean = {
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (!cond && System.nanoTime() < deadline) Thread.sleep(5)
+    cond
+  }
+
+  /** A memo build that parks until `release` opens, then builds `df`. */
+  private def gated(started: CountDownLatch, release: CountDownLatch)(df: => DataFrame) = {
+    started.countDown()
+    assert(release.await(30, TimeUnit.SECONDS), "gated build never released")
+    df
+  }
+
+  test("same-key requesters share one build: the second waits on the per-key mutex") {
+    import spark.implicits._
+    val (inBuild, finish) = (new CountDownLatch(1), new CountDownLatch(1))
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+    def request() = got.add(Caches.memoized(spark, "caches-spec", "shared") {
+      builds.incrementAndGet(); gated(inBuild, finish)(Seq(1).toDF("x"))
+    })
+    val tA = new Thread(() => request())
+    tA.start()
+    assert(inBuild.await(30, TimeUnit.SECONDS), "first builder never started")
+    val tB = new Thread(() => request())
+    tB.start()
+    assert(within30s(tB.getState == Thread.State.WAITING), "second requester never blocked")
+    finish.countDown()
+    tA.join(30000); tB.join(30000)
+    assert(!tA.isAlive && !tB.isAlive, "a requester hung")
+    assert(builds.get == 1, s"the build closure ran ${builds.get} times")
+    val frames = got.asScala.toSeq
+    assert(frames.size == 2 && (frames.head eq frames.last), "requesters got different frames")
+    Caches.releaseAll()
+  }
+
+  /** Records every span as (thread, open/close, key) in arrival order. */
+  private class RecordingTrace extends Caches.BuildTrace {
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Option[String])]()
+    def span[A](key: Option[String])(body: => A): A = {
+      val t = Thread.currentThread.getName
+      events.add((t, "open", key))
+      try body finally events.add((t, "close", key))
+    }
+    def on(thread: String): Seq[(String, Option[String])] =
+      events.asScala.toSeq.collect { case (`thread`, e, k) => (e, k) }
+  }
+
+  private def nested(outer: String, inner: Option[String]) =
+    Seq(("open", Some(outer)), ("open", inner), ("close", inner), ("close", Some(outer)))
+
+  test("the build trace sees nested builds, mutex waits inside builds, and no memo hits") {
+    import spark.implicits._
+    val trace = new RecordingTrace
+    Caches.trace = Some(trace)
+    try {
+      val outer = Caches.memoized(spark, "caches-trace", "outer") {
+        Caches.memoized(spark, "caches-trace", "inner")(Seq(1).toDF("x")).selectExpr("x * 2")
+      }
+      assert(trace.on(Thread.currentThread.getName) == nested("outer", Some("inner")))
+      // a sibling holds the child's build open while a parent build
+      // requests that child: the parent's thread waits inside its span
+      val (childStarted, finishChild) = (new CountDownLatch(1), new CountDownLatch(1))
+      def child() = Caches.memoized(spark, "caches-trace", "child") {
+        gated(childStarted, finishChild)(Seq(2).toDF("y"))
+      }
+      val sibling = new Thread(() => child(), "trace-sibling")
+      sibling.start()
+      assert(childStarted.await(30, TimeUnit.SECONDS), "sibling never started the child")
+      val parent = new Thread(() => Caches.memoized(spark, "caches-trace", "parent")(child()),
+        "trace-parent")
+      parent.start()
+      assert(within30s(trace.on("trace-parent").contains(("open", None))), "parent never waited")
+      finishChild.countDown()
+      sibling.join(30000); parent.join(30000)
+      assert(!sibling.isAlive && !parent.isAlive, "a builder hung")
+      assert(trace.on("trace-parent") == nested("parent", None))
+      assert(trace.on("trace-sibling") == Seq(("open", Some("child")), ("close", Some("child"))))
+      trace.events.clear()
+      assert(Caches.memoized(spark, "caches-trace", "outer")(fail("memo hit rebuilt")) eq outer)
+      assert(trace.events.isEmpty, s"a memo hit opened spans: ${trace.events}")
+    } finally {
+      Caches.trace = None
+      Caches.releaseAll()
+    }
+  }
+
   test("hammer: interleaved builds and releases leave no resurrected or leaked frames") {
     import spark.implicits._
     // N threads x M keys x repeated memoized+count with releaseAll
@@ -185,13 +276,6 @@ class CachesSpec extends AnyFunSuite {
     assert(leaked().isEmpty, s"cached RDDs leaked past releaseAll + cleaner: ${leaked()}")
   }
 
-  /** The registry-wide leak guard: materialize EVERY registered query at
-    * the smoke tier (a full Verify-shaped pass — this is also the one
-    * place all 100+ queries execute under `sbt test`), then prove
-    * releaseAll unpersists every frame the pass registered and empties
-    * the memo. A leak here grows with the registry, which is exactly
-    * when it would start to hurt.
-    */
   test("parquetArtifact: stable across releaseAll, rebuild overwrites cleanly") {
     val spark = TestSpark.spark
     import spark.implicits._
@@ -209,6 +293,13 @@ class CachesSpec extends AnyFunSuite {
     Caches.releaseAll()
   }
 
+  /** The registry-wide leak guard: materialize EVERY registered query at
+    * the smoke tier (a full Verify-shaped pass — this is also the one
+    * place all 100+ queries execute under `sbt test`), then prove
+    * releaseAll unpersists every frame the pass registered and empties
+    * the memo. A leak here grows with the registry, which is exactly
+    * when it would start to hurt.
+    */
   test("a full registry pass releases every memoized frame") {
     val sf = TestSpark.sf
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -479,7 +479,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(!stage.exists, "stage dir must be consumed by the promotion")
 
     // window 2 — crash MID-STAGE-WRITE (no completion markers): the dead
-    // partial stage is discarded, live state is untouched, and the
+    // partial stage is dropped, live state is untouched, and the
     // redelivered batch applies cleanly
     val p2 = java.nio.file.Files.createTempDirectory("st-crash2").resolve("state").toString
     assert(Streaming.applyStateBatch(f1, 0L, p2))
@@ -489,7 +489,7 @@ class StreamingSpec extends AnyFunSuite {
       new java.io.File(deadStage, "part-00000.parquet").toPath, "garbage")
     assert(Streaming.applyStateBatch(f2, 1L, p2), "batch must apply after discard")
     assert(!new java.io.File(deadStage, "part-00000.parquet").exists,
-      "incomplete stage must be discarded")
+      "incomplete stage must be dropped")
     assert(st(Streaming.readUserState(spark, p2)) == expect)
 
     // corrupt fence sidecar: parse failure degrades to carrier-absent
@@ -512,7 +512,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(new java.io.File(p3old).renameTo(staleStage), "test setup: old live -> stage")
     val f3 = evs(Seq((2L, 4L, 9L, "view", 0.5)))
     assert(Streaming.applyStateBatch(f3, 2L, p3))
-    assert(!staleStage.exists, "stale stage must be discarded, not promoted")
+    assert(!staleStage.exists, "stale stage must be dropped, not promoted")
     assert(st(Streaming.readUserState(spark, p3)) ==
       st(Streaming.userState(f1.unionByName(f2).unionByName(f3))),
       "restored live state was clobbered by the stale stage")
@@ -533,7 +533,7 @@ class StreamingSpec extends AnyFunSuite {
       new java.io.File(junkStage, "_fence").toPath, "not-a-batch-id")
     val f4b = evs(Seq((3L, 5L, 12L, "view", 4.0)))
     assert(Streaming.applyStateBatch(f4b, 2L, p4))
-    assert(!junkStage.exists, "unparseable-fence stage must be discarded")
+    assert(!junkStage.exists, "unparseable-fence stage must be dropped")
     assert(st(Streaming.readUserState(spark, p4)) ==
       st(Streaming.userState(f1.unionByName(f2).unionByName(f4b))),
       "live state was clobbered by the unparseable-fence stage")
